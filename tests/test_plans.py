@@ -655,8 +655,11 @@ def test_plan_audit_table_matches_fingerprints():
     doc = open(
         os.path.join(os.path.dirname(os.path.dirname(__file__)), "PLAN_AUDIT.md")
     ).read()
-    for line in generated:
-        assert line in doc, f"PLAN_AUDIT.md is stale; regenerate: {line}"
+    missing = [line for line in generated if line not in doc]
+    assert not missing, (
+        f"PLAN_AUDIT.md is stale; regenerate ({len(missing)} rows missing):\n"
+        + "\n".join(missing)
+    )
 
 
 def test_round8_graph_rows_have_no_cartesian(spark):
