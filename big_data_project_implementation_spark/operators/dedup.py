@@ -1153,7 +1153,7 @@ def connected_components(
         """One large-star + small-star contraction (Kiveris et al.):
         pure plan builder, no action. Idempotent at the fixpoint —
         applying it to a converged star forest returns the same edge
-        set — which is what lets rounds be batched per checkpoint."""
+        set, so an unchanged signature means convergence."""
         # large-star: for each node u, link every strictly-larger
         # neighbor v to m = min(N(u) ∪ {u}).
         sym = e.select(
@@ -1183,31 +1183,21 @@ def connected_components(
             .distinct()
         )
 
-    # TWO star-rounds compose lazily into each checkpointed plan
-    # (round 14, guide §1.2): per materialization the loop used to pay
-    # one checkpoint job + one signature job per round; at sub-second
-    # round volumes that job/planning overhead — not the contraction
-    # itself — dominated dedup_clusters. Batching halves it. The
-    # fixpoint is unchanged: a star round is idempotent at convergence,
-    # so the extra composed round past the fixpoint is a no-op and the
-    # signature-equality test fires exactly as before.
-    for _batch in range(max(1, (max_iterations + 1) // 2)):
-        # size this batch's OUTPUT from the previous batch's measured
+    for _round in range(max_iterations):
+        # size this round's OUTPUT from the previous round's measured
         # count: edge sets shrink geometrically, so the new edge set is
         # at most the same scale as the last one. Narrow-coalescing the
-        # batch plan BEFORE the eager checkpoint makes the checkpoint
+        # round plan BEFORE the eager checkpoint makes the checkpoint
         # job's final stage and the follow-up signature scan run
         # `target`-many tasks instead of shuffle-partition-many
         # near-empty ones (measured: 2 x 32 idle-task stages per round
-        # at sub-MB edge volumes). The cap is the batch input's
+        # at sub-MB edge volumes). The cap is the round input's
         # partition count, so a 100 TB edge set keeps full parallelism.
         out_target = max(
             1, min(edges.rdd.getNumPartitions(), prev_sig[0] // 500_000 + 1)
         )
         new_edges = (
-            _star_round(_star_round(edges))
-            .coalesce(out_target)
-            .localCheckpoint(eager=True)
+            _star_round(edges).coalesce(out_target).localCheckpoint(eager=True)
         )
         sig = _edge_signature(new_edges)
         edges = _sized(new_edges, sig[0])
@@ -1215,10 +1205,7 @@ def connected_components(
         # logging it gives the O(log n) edge-decay evidence per run
         # (SCALING.md's rounds-x-decay probes read these lines)
         logging.getLogger(__name__).info(
-            "connected_components rounds %d-%d: %d edges",
-            2 * _batch + 1,
-            2 * _batch + 2,
-            sig[0],
+            "connected_components round %d: %d edges", _round + 1, sig[0]
         )
         if sig == prev_sig:
             break

@@ -430,7 +430,10 @@ def _route_nearest_cell(df: DataFrame, cents: DataFrame, vec_col: str) -> DataFr
     instead of once per (row, cell) candidate. The strict ``>`` fold
     over ascending cells reproduces the argmax tie rule exactly,
     including Spark's NaN-is-largest comparison semantics (Spark's
-    ``>`` agrees with its sort order on NaN, unlike IEEE).
+    ``>`` agrees with its sort order on NaN, unlike IEEE). A zero norm
+    (zero centroid or zero vector) scores NULL instead of raising under
+    ANSI division, and a NULL score ranks below every defined cosine;
+    a row whose every score is NULL routes to the lowest cell.
 
     Adds ``cell`` and ``_vq`` (the row's micro-unit quantized vector)
     to ``df``; every input column passes through."""
@@ -440,13 +443,13 @@ def _route_nearest_cell(df: DataFrame, cents: DataFrame, vec_col: str) -> DataFr
         F.col("_cells"),
         lambda c: F.struct(
             c["cell"].alias("cell"),
-            (
+            F.try_divide(
                 F.aggregate(
                     F.zip_with(F.col("_vq"), c["centroid"], lambda x, y: x * y),
                     zero,
                     lambda a, t: a + t,
-                ).cast("double")
-                / (F.col("_nvs") * F.sqrt(c["nc"].cast("double")))
+                ).cast("double"),
+                F.col("_nvs") * F.sqrt(c["nc"].cast("double")),
             ).alias("cos"),
         ),
     )
@@ -457,7 +460,10 @@ def _route_nearest_cell(df: DataFrame, cents: DataFrame, vec_col: str) -> DataFr
             F.lit(None).cast("double").alias("cos"),
         ),
         lambda acc, s: F.when(
-            acc["cell"].isNull() | (s["cos"] > acc["cos"]), s
+            acc["cell"].isNull()
+            | (acc["cos"].isNull() & s["cos"].isNotNull())
+            | (s["cos"] > acc["cos"]),
+            s,
         ).otherwise(acc),
         lambda acc: acc["cell"],
     )

@@ -1,14 +1,13 @@
 """Query registry: every operator capability exposed as a named query.
 
 Each entry pairs a Spark DataFrame program with (when SQL-expressible)
-an equivalent DuckDB oracle SQL string. The driver's correctness gate
-runs both at sf0.01 and hash-compares; tests/tools do the same locally.
+an equivalent DuckDB oracle SQL string; tests/test_queries_oracle.py
+runs both for every entry and hash-compares them.
 
-Import order populates the registry.
+``REGISTRY`` holds the entries in the order their ``@query`` decorators
+ran: the submodules below, imported in sorted order, each in source
+order.
 """
-
-import glob as _glob
-import os as _os
 
 from big_data_project_implementation_spark.queries.registry import (
     REGISTRY,
@@ -30,270 +29,4 @@ from big_data_project_implementation_spark.queries import (  # noqa: E402,F401
     windows_q,
 )
 
-# The driver's correctness gate certifies only the FIRST 50 registry
-# entries per round, so registration order decides which families get
-# driver rows. The active window auto-rotates on the round number,
-# detected from the CORRECTNESS_r*.json files the driver writes at the
-# end of every evaluated round (none committed mid-round). Schedule:
-# rounds 1-2 certified agg/fn/join/pipeline (alphabetical order);
-# round 3 the window below; round 4+ the never-certified remainder
-# plus rotated-back round-1/2 representatives. Full map: COVERAGE.md.
-_WINDOW_R3 = [
-    # TPC-H (22) — the reference's own benchmark-correctness class
-    "q1_pricing_summary", "q2_min_price_supplier", "q3_shipping_priority",
-    "q4_order_priority", "q5_local_supplier_volume", "q6_forecast_revenue",
-    "q7_volume_shipping", "q8_market_share", "q9_product_profit",
-    "q10_returned_items", "q11_important_value", "q12_priority_shipping",
-    "q13_customer_distribution", "q14_promo_effect", "q15_top_supplier",
-    "q16_supplier_cnt", "q17_small_quantity_revenue",
-    "q18_large_volume_customer", "q19_disjunctive_join",
-    "q20_potential_promotion", "q21_waiting_orders", "q22_global_sales",
-    # windows (7)
-    "window_ranking", "window_lag_lead", "window_running_agg",
-    "window_range_frame", "window_topn_per_group", "window_share_of_total",
-    "window_named_sql",
-    # UDF surface (6)
-    "udf_pandas_scalar", "udf_grouped_agg", "udf_apply_in_pandas",
-    "udf_map_in_pandas", "udf_cogroup", "udf_classic_python",
-    # streaming (5)
-    "stream_tumbling_window", "stream_sliding_window", "stream_per_key_counts",
-    "stream_stream_join", "stream_sessionize",
-    # multimodal features (de-stubbed this round; oracled via the
-    # synthesize→header-parse closed-form round trip)
-    "multimodal_features",
-    # relational / set-ops (9 of 15)
-    "project_filter", "predicates_null_in_like", "union_all",
-    "intersect_distinct", "except_distinct", "except_all_bag",
-    "intersect_all_bag", "explode_lateral_view", "sql_front_door",
-]
-
-_WINDOW_R4 = [
-    # the 33 entries with no driver row after rounds 1-3: round-2-era
-    # leftovers + every round-3 addition
-    "distinct_dropdup", "topk_order_limit", "sort_multi_key",
-    "posexplode_outer", "repartition_roundtrip", "sample_bernoulli",
-    "dedup_clusters", "dedup_clusters_lsh", "dedup_spans", "dedup_mass",
-    "dedup_source_overlap", "similarity_ivf_topk",
-    "embedding_label_centroids", "graph_pagerank",
-    "text_pii_scrub", "text_quality_filter", "data_hash_split",
-    "text_pack_sequences", "sample_stratified", "text_unigram_logprob",
-    "text_decontaminate", "text_tfidf_topk", "text_bm25_search",
-    "data_token_budget_mixture",
-    "events_funnel", "events_retention", "events_rolling_active",
-    "agg_percentile_exact", "diag_key_skew", "multimodal_frame_sample",
-    "stream_dedup_exact", "stream_quality_filter", "stream_static_join",
-    # q12: the one red driver row of round 3 (oracle-side HUGEINT bug,
-    # fixed in tpch_q.py) — swapped in for agg_function_library (green
-    # in r1-r2, rotates back in _WINDOW_R5) so the fail recertifies
-    "q12_priority_shipping",
-    # 16 rotated-back round-1/2 representatives (agg family + anchors)
-    "agg_moments", "agg_first_last_minmax_by",
-    "agg_distinct_multi", "agg_rollup", "agg_cube", "agg_grouping_sets",
-    "agg_pivot", "agg_having", "stat_crosstab_freq", "na_fill_drop_replace",
-    "describe_summary", "agg_approx_count_distinct", "agg_approx_quantile",
-    "join_inner_shuffle", "fn_cast_matrix", "dedup_exact_prefix",
-]
-
-
-_WINDOW_R5 = [
-    # the 34 registry entries absent from both _WINDOW_R3 and
-    # _WINDOW_R4 — their newest driver row is round-1/2 vintage and
-    # would go stale otherwise: full fn_* scalar library, the join
-    # family, and the remaining text/dedup/similarity/multimodal ops
-    "agg_function_library",
-    "fn_string_basic", "fn_regex_split", "fn_datetime", "fn_math",
-    "fn_conditional_case", "fn_json_extract", "fn_complex_types",
-    "fn_higher_order_array", "fn_hash_digest",
-    "fn_partition_introspection", "fn_string_advanced", "fn_map_type",
-    "fn_datetime_advanced", "fn_array_setops",
-    "join_broadcast_dim", "join_left_outer", "join_right_outer",
-    "join_full_outer", "join_left_semi", "join_left_anti", "join_cross",
-    "join_theta_range", "join_self_asof",
-    "text_stats", "text_language_id",
-    "dedup_word_jaccard", "dedup_minhash_lsh", "dedup_simhash",
-    "similarity_bruteforce_topk", "similarity_lsh_topk",
-    "embedding_near_dup", "embedding_near_dup_lsh", "multimodal_metadata",
-    # the 14 round-4 additions — first driver row next window
-    "events_sessionize", "events_scd2", "events_point_in_interval",
-    "text_chunk_overlap", "text_ngram_topk", "text_stopword_strip",
-    "text_pack_bfd", "er_blocked_pairs", "embedding_quantize",
-    "agg_histogram", "stream_point_in_interval",
-    "pipeline_curate_end_to_end", "graph_triangle_count",
-    "graph_degree_hist",
-    # 2 rotated-back round-3-certified anchors; the rest of the R3
-    # window re-certifies at round 6 when the cycle returns to
-    # _WINDOW_R3
-    "q1_pricing_summary", "multimodal_features",
-]
-
-
-_WINDOW_SIZE = 50
-
-
-def _repo_root() -> str:
-    return _os.path.dirname(
-        _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__)))
-    )
-
-
-def _round_number(root: str | None = None) -> int:
-    """Rounds completed so far = CORRECTNESS files the driver has
-    written; the build round in progress is that + 1. Falls back to
-    round 3 (this window's vintage) if the files are unreadable."""
-    try:
-        return len(
-            _glob.glob(_os.path.join(root or _repo_root(), "CORRECTNESS_r*.json"))
-        ) + 1
-    except OSError:
-        return 3
-
-
-def _driver_history(root: str | None = None) -> dict[str, tuple[int, bool]]:
-    """name → (round of newest driver row, whether that row was green).
-
-    Green = rows+schema match, no error, and — when an oracle ran —
-    hash match too (``hash_match`` is absent/None on rows-only rows,
-    which still count as their by-design pass)."""
-    import json as _json
-    import re as _re
-
-    hist: dict[str, tuple[int, bool]] = {}
-    for path in sorted(_glob.glob(_os.path.join(root or _repo_root(), "CORRECTNESS_r*.json"))):
-        m = _re.search(r"r(\d+)\.json$", path)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        try:
-            with open(path) as f:
-                data = _json.load(f)
-        except (OSError, ValueError):
-            continue
-        if not isinstance(data, dict):
-            continue
-        for name, row in data.items():
-            if not isinstance(row, dict):
-                continue
-            if row.get("err") == "no_oracle":
-                # rows-only by design: green iff the Spark side ran
-                ok = row.get("spark_rows") is not None
-            else:
-                ok = (
-                    bool(row.get("rows_match"))
-                    and bool(row.get("schema_match"))
-                    and row.get("hash_match") is not False
-                    and not row.get("err")
-                )
-            prev = hist.get(name)
-            if prev is None or rnd >= prev[0]:
-                hist[name] = (rnd, ok)
-    return hist
-
-
-def _rows_only_latest(root: str | None = None) -> set[str]:
-    """Names whose NEWEST driver row was a rows-only check
-    (``err == "no_oracle"`` with a live Spark side). Used by the
-    rotation: if such a query has since gained an oracle, its next
-    driver row upgrades from rows-only to hash-match evidence, so it
-    jumps the stale-green queue."""
-    import json as _json
-    import re as _re
-
-    latest: dict[str, tuple[int, bool]] = {}
-    for path in sorted(
-        _glob.glob(_os.path.join(root or _repo_root(), "CORRECTNESS_r*.json"))
-    ):
-        m = _re.search(r"r(\d+)\.json$", path)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        try:
-            with open(path) as f:
-                data = _json.load(f)
-        except (OSError, ValueError):
-            continue
-        if not isinstance(data, dict):
-            continue
-        for name, row in data.items():
-            if not isinstance(row, dict):
-                continue
-            is_ro = (
-                row.get("err") == "no_oracle"
-                and row.get("spark_rows") is not None
-            )
-            prev = latest.get(name)
-            if prev is None or rnd >= prev[0]:
-                latest[name] = (rnd, is_ro)
-    return {n for n, (_, ro) in latest.items() if ro}
-
-
-def _computed_window(
-    names: list[str],
-    history: dict[str, tuple[int, bool]],
-    size: int = _WINDOW_SIZE,
-    upgraded: set[str] | None = None,
-) -> list[str]:
-    """The ``size`` registry entries most in need of a driver row.
-
-    Priority (pure function of the committed driver files, so every
-    environment — builder, driver, judge — computes the same window):
-      1. red latest driver row (a fixed fail must recertify first);
-      2. never certified (new operators get their row next round);
-      3. ``upgraded`` — latest row was rows-only but the query now
-         carries an oracle, so the next row is a strict evidence
-         upgrade (rows-only → hash-match);
-      4. stalest green row (oldest round first), so nothing certified
-         goes more than ceil(len(registry)/size) rounds without a
-         fresh driver row;
-    ties broken by registration order (stable and deterministic).
-    The window keeps registration order among the chosen entries so
-    related families stay adjacent in CORRECTNESS_r{N}.json."""
-    order = {n: i for i, n in enumerate(names)}
-    upgraded = upgraded or set()
-
-    def prio(n: str) -> tuple[int, int, int]:
-        last = history.get(n)
-        if last is not None and not last[1]:
-            return (0, last[0], order[n])  # red row: highest priority
-        if last is None:
-            return (1, 0, order[n])  # never certified
-        if n in upgraded:
-            return (2, last[0], order[n])  # oracle upgrade pending
-        return (3, last[0], order[n])  # stalest green first
-
-    chosen = set(sorted(names, key=prio)[:size])
-    return [n for n in names if n in chosen]
-
-
-# Rounds 1-2 certified the first 50 alphabetical entries; round 3 the
-# pinned R3 window. From round 4 on the window is COMPUTED from the
-# driver's own CORRECTNESS_r*.json history (red rows, then
-# never-certified, then stalest green), so newly added queries take
-# slots automatically and no family goes stale — no hand-edited
-# _WINDOW_R6+ needed. The pinned R4/R5 lists remain as the fallback
-# should the driver files ever be unreadable.
-_round = _round_number()
-if _round <= 3:
-    _CERTIFICATION_WINDOW = _WINDOW_R3
-else:
-    try:
-        _upgraded = {
-            n
-            for n in _rows_only_latest()
-            if n in REGISTRY and REGISTRY[n].oracle is not None
-        }
-        _CERTIFICATION_WINDOW = _computed_window(
-            list(REGISTRY), _driver_history(), upgraded=_upgraded
-        )
-    except Exception:  # never let rotation break imports
-        _CERTIFICATION_WINDOW = (_WINDOW_R3, _WINDOW_R4, _WINDOW_R5)[(_round - 3) % 3]
-
-_window_set = set(_CERTIFICATION_WINDOW)
-_missing = _window_set - set(REGISTRY)
-if _missing:  # fail loudly at import — a typo here silently shrinks the gate
-    raise RuntimeError(f"certification window names not in registry: {_missing}")
-_ordered = {n: REGISTRY[n] for n in _CERTIFICATION_WINDOW}
-_ordered.update((n, s) for n, s in list(REGISTRY.items()) if n not in _window_set)
-REGISTRY.clear()
-REGISTRY.update(_ordered)
-
-__all__ = ["REGISTRY", "QuerySpec", "query", "_CERTIFICATION_WINDOW"]
+__all__ = ["REGISTRY", "QuerySpec", "query"]

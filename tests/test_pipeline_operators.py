@@ -344,6 +344,26 @@ def test_ivf_topk_recall_vs_bruteforce(spark):
         assert -1.0001 <= r.cos <= 1.0001
 
 
+def test_route_nearest_cell_ranks_zero_norm_centroid_lowest(spark):
+    """A zero-norm centroid scores cos = NULL. Routing must rank it
+    below every defined cosine even when it is the lowest cell; a
+    zero query vector, whose every score is NULL, routes to the lowest
+    cell."""
+    cents = spark.createDataFrame(
+        [(1, [0, 0]), (2, [1_000_000, 0]), (3, [0, 1_000_000])],
+        "cell int, centroid array<long>",
+    )
+    vecs = spark.createDataFrame(
+        [(0, [0.1, 0.9]), (1, [0.9, 0.1]), (2, [0.0, 0.0])],
+        "id int, v array<float>",
+    )
+    got = {
+        r.id: r.cell
+        for r in similarity._route_nearest_cell(vecs, cents, "v").collect()
+    }
+    assert got == {0: 3, 1: 2, 2: 1}
+
+
 def test_pipe_transform_linewise(spark):
     """ScriptTransformation parity: rows stream through an external
     process and come back row-aligned."""
@@ -453,6 +473,26 @@ def test_connected_components_long_chain_converges(spark):
     rows = dedup.connected_components(pairs).collect()
     assert len(rows) == n
     assert {r["component"] for r in rows} == {0}
+
+
+def test_connected_components_runs_exactly_max_iterations(spark):
+    """max_iterations caps star rounds one for one: on the 64-node
+    chain neither 1 nor 2 rounds converge, and the second round moves
+    the labels, so the two caps give different labelings."""
+    n = 64
+    pairs = spark.createDataFrame(
+        [(i + 1, i) for i in range(n - 1)], "id_a long, id_b long"
+    )
+
+    def labels(cap):
+        return {
+            (r.id, r.component)
+            for r in dedup.connected_components(pairs, max_iterations=cap).collect()
+        }
+
+    one, two = labels(1), labels(2)
+    assert {c for _, c in two} != {0}
+    assert one != two
 
 
 def test_connected_components_empty_and_self_loops(spark):

@@ -255,41 +255,6 @@ def test_ivfpq_compact_single_writer_lock(spark, tmp_path):
     assert merged.count() == 3
 
 
-def test_staleness_table_matches_generator():
-    """VERDICT r9 #6 + r10 #2: COVERAGE.md's per-family staleness
-    table is generated (tools/gen_staleness.py) from the committed
-    CORRECTNESS_r*.json history — and the block RECORDS the newest
-    round it was generated from, so this sync test regenerates against
-    that pinned round set. Without the pin, the test went red every
-    round the moment the driver dropped a NEW CORRECTNESS file after
-    the builder's final commit (the round-10 race): doc == generator
-    is checked without depending on judge-time artifacts."""
-    import os
-    import re
-    import sys
-
-    sys.path.insert(
-        0, os.path.join(os.path.dirname(__file__), os.pardir, "tools")
-    )
-    import gen_staleness
-
-    with open(
-        os.path.join(os.path.dirname(__file__), os.pardir, "COVERAGE.md")
-    ) as fh:
-        text = fh.read()
-    m = re.search(
-        re.escape(gen_staleness.BEGIN) + r"\n(.*?)\n" + re.escape(gen_staleness.END),
-        text,
-        flags=re.S,
-    )
-    assert m, "COVERAGE.md is missing the generated staleness block"
-    block = m.group(1)
-    pin = gen_staleness.MAX_ROUND_RE.search(block)
-    assert pin, "staleness block is missing its max_round pin"
-    body = block.split("\n", 1)[1]
-    assert body == gen_staleness.build_table(int(pin.group(1)))
-
-
 @pytest.mark.parametrize("broadcast", [True, False])
 def test_scd2_apply_arrivals_seam(spark, broadcast):
     """The SCD2-IVM boundary seam, pinned by hand: a repeated state

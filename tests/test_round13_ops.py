@@ -35,9 +35,9 @@ def _sqlcat(spark, **kw):
 
 def test_readme_registry_count_matches_generator():
     """README's registry-count block is generated from the registry
-    (tools/gen_staleness.sync_readme) — the doc must equal the
+    (tools/gen_queries_md.sync_readme) — the doc must equal the
     generator's output so the count can never drift again."""
-    import tools.gen_staleness as gs
+    import tools.gen_queries_md as gs
 
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     with open(os.path.join(root, "README.md")) as fh:

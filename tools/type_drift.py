@@ -10,11 +10,12 @@ Usage: python tools/type_drift.py [--sf-dir /root/testdata/sf0.001]
 from __future__ import annotations
 
 import argparse
+import os
 import sys
 
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from tools.check_correctness import duck_connect  # noqa: E402
 
