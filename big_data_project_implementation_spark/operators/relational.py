@@ -29,9 +29,9 @@ def salted_join(
     each row to all sub-keys (×salt blowup — keep the replicated side
     the smaller one). Result is row-identical to the plain join.
 
-    MEASURED decision rule (tools/skew_probe.py on a synthetic
-    power-law key, 30M facts with one key owning 50% of rows against a
-    100k-row dim, quiet box — SCALING.md round-11: plain SMJ 5.5s;
+    MEASURED decision rule (SCALING.md round-11, the skewed-key
+    shuffle: a synthetic power-law key, 30M facts with one key owning
+    50% of rows against a 100k-row dim, quiet box — plain SMJ 5.5s;
     AQE at default thresholds 5.1s; AQE with the skew threshold
     lowered to 16m 1.75s; this salt 2.35s; broadcast dim 0.38s):
 
@@ -517,8 +517,8 @@ def delta_join_increment(
     the stored view instead of rewriting it, so the OUTPUT is
     ∝ |Δ| · match-rate; compute still pays ONE scan of each base side
     (the probe of the delta joins) but never the base-vs-base shuffle
-    — tools/ivm_probe.py measures the separation at 100× history,
-    SCALING.md round-9 reads it. Bag semantics throughout (UNION ALL;
+    — SCALING.md round-9 records the separation at 100× history.
+    Bag semantics throughout (UNION ALL;
     exact for multiplicities).
 
     With ``broadcast_deltas`` (default) the delta sides are broadcast-
@@ -1019,10 +1019,10 @@ def delta_join_retract_keyed(
     never shuffled, and a view bucketed/partitioned by either id
     prunes that scan further. Bag-exact trivially (ids are unique per
     base row, so anti-join removes exactly the dead rows). Same
-    algebra as the keyless form — tools/ivm_probe.py measures the
-    separation (the keyless exceptAll's 33.8× ratio at 100× history is
-    the price this shape avoids). ``broadcast_deltas=False`` for bulk
-    purges where the id sets rival the view."""
+    algebra as the keyless form — SCALING.md round-9 and round-10
+    record the separation (the keyless exceptAll's 33.8× ratio at 100×
+    history is the price this shape avoids). ``broadcast_deltas=False``
+    for bulk purges where the id sets rival the view."""
     maybe_b = F.broadcast if broadcast_deltas else (lambda d: d)
     return (
         view.join(maybe_b(retract_a_ids.select(a_id).distinct()), a_id, "anti")
@@ -1697,8 +1697,8 @@ def window_view_delta(
     every touched key (state rows of those keys ∪ Δ, one delta-sized
     window). Cost: one semi-probed scan of the state — with
     key-bucketed storage that scan PRUNES to the touched buckets
-    (tools/ivm_probe.py's window probe measures the pruned form: the
-    touched-bucket filter is a driver-side list of ≤ bucket-count
+    (SCALING.md round-11's window-view probe measures the pruned form:
+    the touched-bucket filter is a driver-side list of ≤ bucket-count
     ints, not data) — versus full recompute's scan + full-table
     shuffle + sort. The 100× probe is honest about the alternative:
     on local[32] the full-table shuffle is memory-speed, so the

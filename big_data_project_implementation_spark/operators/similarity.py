@@ -42,9 +42,12 @@ def norm(a: Column | str) -> Column:
 
 
 def cosine(a: Column | str, b: Column | str) -> Column:
+    """Cosine similarity in double. A zero-norm side scores NULL instead
+    of raising under ANSI division; ``desc("cos")`` orderings put it
+    last and ``cos >= threshold`` filters drop it."""
     a_col = F.col(a) if isinstance(a, str) else a
     b_col = F.col(b) if isinstance(b, str) else b
-    return dot(a_col, b_col) / (norm(a_col) * norm(b_col))
+    return F.try_divide(dot(a_col, b_col), norm(a_col) * norm(b_col))
 
 
 def brute_force_topk(
@@ -376,15 +379,16 @@ def cosine_q(vec: Column | str, centq: Column | str) -> Column:
     for 64-dim unit-ish vectors — inside both long and exact-double
     range), and the final sqrt/divide are correctly-rounded IEEE ops
     over exact integers — bit-identical on any engine or partitioning.
-    This is what lets the IVF assignment argmax be oracled in SQL."""
+    This is what lets the IVF assignment argmax be oracled in SQL. A
+    zero norm scores NULL, as in ``cosine``."""
     v = _q6(vec)
     c = F.col(centq) if isinstance(centq, str) else centq
     zero = F.lit(0).cast("long")
     d = F.aggregate(F.zip_with(v, c, lambda x, y: x * y), zero, lambda a, t: a + t)
     nv = F.aggregate(F.transform(v, lambda x: x * x), zero, lambda a, t: a + t)
     nc = F.aggregate(F.transform(c, lambda x: x * x), zero, lambda a, t: a + t)
-    return d.cast("double") / (
-        F.sqrt(nv.cast("double")) * F.sqrt(nc.cast("double"))
+    return F.try_divide(
+        d.cast("double"), F.sqrt(nv.cast("double")) * F.sqrt(nc.cast("double"))
     )
 
 

@@ -326,7 +326,7 @@ class MaterializedView:
                 " partition exceeds skewedPartitionThresholdInBytes (256m"
                 " default) — lower the threshold at mid scale, or"
                 " salted_join when confs are out of reach (measured:"
-                " tools/skew_probe.py, SCALING.md round-11)"
+                " SCALING.md round-11)"
             )
         else:
             row["advice"] = "plain shuffle (AQE-managed); do not force broadcast"

@@ -4,7 +4,8 @@ The reference hand-built its physical planning (SURVEY §3.1 steps 6-8);
 here Catalyst owns it, and this module is how we *verify* the plans we
 get are the plans a 100 TB run needs: filters pushed into scans,
 columns pruned, broadcasts where expected, no stray cartesian products.
-Used by tests/test_plans.py and by bench.py --explain.
+Used by tests/test_plans.py and tools/gen_plan_fingerprints.py;
+``formatted_plan(df)`` prints one query's full formatted plan.
 """
 
 from __future__ import annotations

@@ -808,7 +808,7 @@ def incremental_join_increment(spark: SparkSession, sf_dir: str) -> DataFrame:
     ΔM = (ΔA ⋈ B_new) ∪ (A_old ⋈ ΔB) — which a deployment appends to
     the stored view instead of rewriting it, making BOTH compute and
     OUTPUT ∝ |delta| (the refresh twin re-emits the whole view; this
-    is what actually moves at 100 TB — tools/ivm_probe.py measures it
+    is what actually moves at 100 TB — SCALING.md round-9 measures it
     flat at ~1s while full recompute grows with |A ⋈ B|). The ORACLE
     derives the same set independently as 'full join WHERE either
     side's row is new' — so the hash match certifies the delta algebra
@@ -1275,7 +1275,7 @@ def incremental_join_retract_keyed(
     same GDPR purge (every 13th order, every 11th lineitem) is TWO
     ANTI-JOINS on broadcast id sets — the view is scanned once and
     never shuffled, vs the keyless exceptAll's view-sized all-column
-    shuffle (tools/ivm_probe.py measures the separation at 100×
+    shuffle (SCALING.md round-10 records the separation at 100×
     history). Same deletions, same ORACLE shape as
     ``incremental_join_retract`` — the hash match certifies the keyed
     algebra reaches the identical post-delete view."""

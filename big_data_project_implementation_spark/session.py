@@ -16,9 +16,14 @@ the 100 TB design goals:
   (pandas_udf / mapInPandas / toPandas) is vectorized, never
   row-pickled (the reference's BatchPythonEvaluation,
   sql/core/.../execution/python.scala:356, is the slow ancestor).
-- **shuffle.partitions** defaults to the local core count; on a real
-  cluster this should be ~2-3x total cores — AQE coalesces down, so
-  err high. Overridable via SPARK_GRAFT_SHUFFLE_PARTITIONS.
+- **shuffle.partitions** defaults to the local core count (at least
+  8); on a real cluster this should be ~2-3x total cores — AQE
+  coalesces down, so err high. Pass ``shuffle_partitions=`` to
+  override it, and ``extra_conf`` for any other setting.
+- **Streaming state on RocksDB**, the only state-store provider.
+
+Two environment variables are read: SPARK_GRAFT_CPUS (local cores) and
+SPARK_GRAFT_DRIVER_MEM (driver heap).
 """
 
 from __future__ import annotations
@@ -65,9 +70,7 @@ def get_session(
     """
     cpus = _default_parallelism()
     if shuffle_partitions is None:
-        shuffle_partitions = int(
-            os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", max(cpus, 8))
-        )
+        shuffle_partitions = max(cpus, 8)
     builder = (
         SparkSession.builder.appName(app_name)
         # -- determinism / oracle alignment -------------------------------
@@ -88,12 +91,8 @@ def get_session(
         # keep scan partitions meaty: 128 MiB splits like a real cluster.
         # Scale-dependent (guide §6: 512 MiB - 1 GiB cuts task-scheduling
         # overhead and the map-task count feeding shuffles on large
-        # sequential scans), so overridable per deployment; the local
-        # default stays 128 MiB to keep the driver's bench comparable.
-        .config(
-            "spark.sql.files.maxPartitionBytes",
-            os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "134217728"),
-        )
+        # sequential scans), so a deployment overrides it via extra_conf.
+        .config("spark.sql.files.maxPartitionBytes", "134217728")
         # -- python boundary: Arrow everywhere -----------------------------
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
@@ -113,14 +112,10 @@ def get_session(
         #    cache, changelog-checkpoints incrementally, and is the
         #    documented provider for large-state production streams.
         #    All stateful queries + checkpoint/restart exactly-once
-        #    tests run under it (tests/test_streaming.py);
-        #    SPARK_GRAFT_STATE_STORE=hdfs restores the heap store.
+        #    tests run under it (tests/test_streaming.py).
         .config(
             "spark.sql.streaming.stateStore.providerClass",
             "org.apache.spark.sql.execution.streaming.state."
-            "HDFSBackedStateStoreProvider"
-            if os.environ.get("SPARK_GRAFT_STATE_STORE") == "hdfs"
-            else "org.apache.spark.sql.execution.streaming.state."
             "RocksDBStateStoreProvider",
         )
         # unmodified state files from past versions are reused, not

@@ -364,6 +364,28 @@ def test_route_nearest_cell_ranks_zero_norm_centroid_lowest(spark):
     assert got == {0: 3, 1: 2, 2: 1}
 
 
+def test_brute_force_topk_ranks_zero_norm_vector_last(spark):
+    """A zero-norm vector scores cos = NULL against every query instead
+    of failing the job under ANSI division; its queries still get
+    their defined neighbours ranked first."""
+    emb = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [1.0, 1.0]), (2, [0.0, 0.0])],
+        "vec_id int, embedding array<float>",
+    )
+    got = {
+        (r.query_id, r.rank): (r.neighbor_id, r.cos)
+        for r in similarity.brute_force_topk(emb, emb, k=2).collect()
+    }
+    assert got == {
+        (0, 1): (1, 0.707107),
+        (0, 2): (2, None),
+        (1, 1): (0, 0.707107),
+        (1, 2): (2, None),
+        (2, 1): (0, None),
+        (2, 2): (1, None),
+    }
+
+
 def test_pipe_transform_linewise(spark):
     """ScriptTransformation parity: rows stream through an external
     process and come back row-aligned."""

@@ -599,13 +599,10 @@ def test_bench_plan_fingerprints_pinned(spark):
         if got[n] != BENCH_PLAN_FINGERPRINTS[n]
     }
     assert not mismatches, mismatches
-    # completeness: the pinned set IS the bench set (new bench rows
-    # must arrive with a fingerprint)
-    import bench
+    # completeness: every query perfbench times has a pinned plan
+    from perfbench import metrics
 
-    assert set(BENCH_PLAN_FINGERPRINTS) | set(TPCH_PLAN_FINGERPRINTS) == set(
-        bench.BENCH_QUERIES
-    )
+    assert set(TPCH_PLAN_FINGERPRINTS) == set(metrics.TPCH_ROWS)
 
 
 def test_tpch_plan_fingerprints_pinned(spark):

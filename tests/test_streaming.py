@@ -551,10 +551,6 @@ def test_state_store_is_rocksdb(spark):
     the session conf names the provider, and a live stateful query's
     state-operator metrics carry RocksDB instance metrics (the heap
     provider emits none of them)."""
-    import os
-
-    if os.environ.get("SPARK_GRAFT_STATE_STORE") == "hdfs":
-        pytest.skip("heap store explicitly requested via env")
     assert "RocksDBStateStoreProvider" in spark.conf.get(
         "spark.sql.streaming.stateStore.providerClass"
     )
@@ -689,6 +685,127 @@ def test_exact_ingest_gate_restart_is_exactly_once(spark):
         shutil.rmtree(ckpt, ignore_errors=True)
 
 
+DAY_NANOS = 86_400_000_000_000
+SHIFT_NANOS = 31 * DAY_NANOS  # > the 30-day fixture span: no overlap
+KEY_STRIDE = 10_000_000
+
+
+def build_stream_dir(spark, src: str, dst: str, factor: int) -> None:
+    """Write `factor` time+key-shifted replicas of events as ordered
+    single parquet files under dst (fresh build each run). Replica i
+    shifts ts by i × 31 days and user/event ids by i × stride, and its
+    mtime pins it as the i-th micro-batch, so event time advances
+    monotonically across batches and the watermark closes each
+    replica's windows as the next arrives. Shifted keys make a state
+    plateau proof of eviction (leaked state would grow ~N×)."""
+    shutil.rmtree(dst, ignore_errors=True)
+    os.makedirs(dst)
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    base = spark.read.parquet(f"{src}/events.parquet")
+    nanos = base.schema["ts"].dataType.simpleString() == "bigint"
+    for i in range(factor):
+        rep = base
+        if nanos:
+            rep = rep.withColumn("ts", F.col("ts") + F.lit(i * SHIFT_NANOS))
+        else:
+            # fixture may decode as TIMESTAMP_NTZ — shift via cast
+            rep = rep.withColumn(
+                "ts",
+                F.timestamp_micros(
+                    F.unix_micros(F.col("ts").cast("timestamp"))
+                    + F.lit(i * (SHIFT_NANOS // 1000))
+                ).cast(rep.schema["ts"].dataType.simpleString()),
+            )
+        rep = rep.withColumn(
+            "user_id", F.col("user_id") + F.lit(i * KEY_STRIDE)
+        ).withColumn("event_id", F.col("event_id") + F.lit(i * KEY_STRIDE))
+        tmp = f"{dst}/.build_{i}"
+        rep.coalesce(1).write.mode("overwrite").parquet(tmp)
+        part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
+        final = f"{dst}/replica_{i:04d}.parquet"
+        os.rename(f"{tmp}/{part}", final)
+        shutil.rmtree(tmp)
+        # file source orders batches by (mtime, path): pin both
+        os.utime(final, (1_700_000_000 + i, 1_700_000_000 + i))
+
+
+def _events_stream(spark, data_dir: str):
+    from pyspark.sql.types import LongType
+
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    schema = spark.read.parquet(data_dir).schema
+    sdf = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(data_dir)
+    )
+    if isinstance(schema["ts"].dataType, LongType):
+        sdf = sdf.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    else:
+        sdf = sdf.withColumn("ts", F.col("ts").cast("timestamp"))
+    return sdf
+
+
+def sessionize(s, d):
+    """Append-mode session windows over the replica stream, mirroring
+    the registry's stateful sessionize row."""
+    return (
+        _events_stream(s, d)
+        .withWatermark("ts", "2 hours")
+        .groupBy(F.session_window("ts", "30 minutes"), "user_id")
+        .agg(F.count("*").alias("n_events"))
+    )
+
+
+def run_probe(spark, name: str, build, data_dir: str) -> dict:
+    """Run ``build(session, data_dir)`` to completion into a noop sink
+    and return its per-batch state-operator metrics and their totals."""
+    import uuid
+
+    sub = spark.newSession()
+    sub.conf.set("spark.sql.shuffle.partitions", "8")
+    # keep every batch's progress (default retains last 100)
+    sub.conf.set("spark.sql.streaming.numRecentProgressUpdates", "1000")
+    ckpt = tempfile.mkdtemp(prefix=f"state_probe_{name}_")
+    try:
+        q = (
+            build(sub, data_dir)
+            .writeStream.format("noop")
+            .queryName("p" + uuid.uuid4().hex[:8])
+            .outputMode("append")
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
+    batches = []
+    for p in q.recentProgress:
+        if not p.get("stateOperators"):
+            continue
+        so = p["stateOperators"][0]
+        batches.append(
+            {
+                "batch": p["batchId"],
+                "input": p["numInputRows"],
+                "rows_total": so["numRowsTotal"],
+                "rows_removed": so["numRowsRemoved"],
+                "mem_mb": round(so["memoryUsedBytes"] / 1e6, 2),
+                "rocksdb": any(
+                    k.startswith("rocksdb")
+                    for k in so.get("customMetrics", {})
+                ),
+            }
+        )
+    totals = {
+        "state_rows_max": max((b["rows_total"] for b in batches), default=0),
+        "rows_removed_total": sum(b["rows_removed"] for b in batches),
+        "rocksdb": all(b["rocksdb"] for b in batches) and bool(batches),
+    }
+    return {"totals": totals, "batches": batches}
+
+
 def test_rocksdb_state_bounded_by_watermark_across_batches(spark):
     """Watermark eviction bounds stateful-stream state by the ACTIVE
     event-time window, not total ingested volume (VERDICT r7 #2): over
@@ -696,30 +813,18 @@ def test_rocksdb_state_bounded_by_watermark_across_batches(spark):
     key count while rows_removed accounts for closed sessions, every
     batch running on the RocksDB provider; and a LATE file (behind the
     watermark) is dropped without growing state. The 100× record lives
-    in SCALING.md via tools/stream_state_probe.py — this pins the
-    mechanism at test scale."""
-    import os
-    import sys
-
-    sys.path.insert(
-        0, os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools")
-    )
-    import stream_state_probe as ssp
-
+    in SCALING.md's round-8 section — this pins the mechanism at test
+    scale."""
     data_dir = tempfile.mkdtemp(prefix="state_bound_")
     try:
-        ssp.build_stream_dir(spark, SF_DIR, data_dir, 3)
+        build_stream_dir(spark, SF_DIR, data_dir, 3)
         # a LATE replica: replica-0 timestamps (31+ days behind the
         # watermark after batch 2) arriving LAST — mtime pins order
-        import shutil as _sh
-
         late = os.path.join(data_dir, "replica_9999_late.parquet")
-        _sh.copyfile(os.path.join(data_dir, "replica_0000.parquet"), late)
+        shutil.copyfile(os.path.join(data_dir, "replica_0000.parquet"), late)
         os.utime(late, (1_700_000_500, 1_700_000_500))
 
-        res = ssp.run_probe(
-            spark, "sessionize", ssp._builders()["sessionize"], data_dir
-        )
+        res = run_probe(spark, "sessionize", sessionize, data_dir)
         b = res["batches"]
         assert res["totals"]["rocksdb"], "not on RocksDB"
         assert res["totals"]["rows_removed_total"] > 0, "no eviction"

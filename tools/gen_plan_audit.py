@@ -24,18 +24,17 @@ def _fmt_joins(joins: tuple[str, ...]) -> str:
 
 
 def main() -> None:
-    from bench import BENCH_QUERIES
-
     from tests.test_plans import (
         BENCH_PLAN_FINGERPRINTS,
         TPCH_PLAN_FINGERPRINTS,
     )
 
-    merged = {**TPCH_PLAN_FINGERPRINTS, **BENCH_PLAN_FINGERPRINTS}
     print("| query | shuffles | joins |")
     print("|---|---|---|")
-    for name in BENCH_QUERIES:  # bench order, the order readers scan
-        shuffles, joins = merged[name]
+    for name, (shuffles, joins) in {
+        **TPCH_PLAN_FINGERPRINTS,
+        **BENCH_PLAN_FINGERPRINTS,
+    }.items():
         print(f"| {name} | {shuffles} | {_fmt_joins(joins)} |")
 
 

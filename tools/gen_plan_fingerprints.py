@@ -1,8 +1,8 @@
 """Generate (shuffle count, sorted join multiset) plan fingerprints
-for every bench.py headline query — the data behind
-tests/test_plans.py's *_PLAN_FINGERPRINTS dicts and PLAN_AUDIT.md's
-table, so docs and tests derive from one source and cannot diverge
-(VERDICT r6 #1/#8).
+for every query in tests/test_plans.py's *_PLAN_FINGERPRINTS dicts
+(the one list of pinned queries), or for the names given — the data
+behind those dicts and PLAN_AUDIT.md's table, so docs and tests derive
+from one source and cannot diverge (VERDICT r6 #1/#8).
 
 Usage:
     python tools/gen_plan_fingerprints.py [--sf-dir /root/testdata/sf0.001] [names...]
@@ -34,13 +34,15 @@ def main() -> None:
     ap.add_argument("names", nargs="*")
     args = ap.parse_args()
 
-    from bench import BENCH_QUERIES
-
     from big_data_project_implementation_spark import get_session, plans
     from big_data_project_implementation_spark.queries import REGISTRY
+    from tests.test_plans import (
+        BENCH_PLAN_FINGERPRINTS,
+        TPCH_PLAN_FINGERPRINTS,
+    )
 
     spark = get_session("plan-fingerprints")
-    names = args.names or BENCH_QUERIES
+    names = args.names or [*TPCH_PLAN_FINGERPRINTS, *BENCH_PLAN_FINGERPRINTS]
     for name in names:
         try:
             df = REGISTRY[name].fn(spark, args.sf_dir)
