@@ -300,20 +300,21 @@ def label_propagation(
             F.max(F.when(F.col("is_own"), F.col("label"))).alias("old_label"),
         )
 
-    # TWO sweeps compose lazily into each checkpointed plan (round 14,
-    # guide §1.2 — same batching as connected_components): per
-    # materialization the loop paid one checkpoint job whose wall at
-    # bench scale is job/planning floor, not aggregation work, so
-    # halving the materializations halves that floor. Checkpoint
-    # placement is semantics-free — the label state after N sweeps is
-    # identical wherever lineage is cut (the unrolled per-sweep DuckDB
-    # oracle hash-certifies every sweep either way).
+    # TWO plain sweeps compose lazily into each checkpointed plan
+    # (round 14, guide §1.2): per materialization the loop paid one
+    # checkpoint job whose wall at bench scale is job/planning floor,
+    # not aggregation work, so halving the materializations halves
+    # that floor. The final probe sweep always runs alone on a
+    # checkpointed state: it reads its state twice (join side and own
+    # labels), so composing it with the sweep before would inline that
+    # edge-sized aggregation twice. Checkpoint placement is
+    # semantics-free — the label state after N sweeps is identical
+    # wherever lineage is cut (the unrolled per-sweep DuckDB oracle
+    # hash-certifies every sweep either way).
     i = 0
     while i < iterations:
-        if iterations - i >= 2:
-            composed = sweep(
-                sweep(labels, probe=False), probe=(i + 1 == iterations - 1)
-            )
+        if iterations - 1 - i >= 2:
+            composed = sweep(sweep(labels))
             i += 2
         else:
             composed = sweep(labels, probe=(i == iterations - 1))

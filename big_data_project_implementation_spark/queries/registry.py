@@ -151,7 +151,6 @@ def events_stream(
     from pyspark.sql import functions as F
     from pyspark.sql.types import LongType
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
     reader = spark.readStream.schema(raw_schema)
     if max_files_per_trigger is not None:

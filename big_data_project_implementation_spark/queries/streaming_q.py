@@ -456,7 +456,6 @@ def _events_stream_with_flush(spark: SparkSession, sf_dir: str) -> DataFrame:
     link = os.path.join(stream_dir, "aaa_events.parquet")
     if not os.path.exists(link):
         os.symlink(f"{sf_dir}/events.parquet", link)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     raw = spark.read.parquet(f"{sf_dir}/events.parquet")
     is_nanos = isinstance(raw.schema["ts"].dataType, LongType)
     sent1 = os.path.join(stream_dir, "zz1_sentinel.parquet")

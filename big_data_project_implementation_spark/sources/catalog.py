@@ -37,15 +37,16 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Columnar parquet scan — Catalyst pushes filters/projection into it.
 
     ``events.ts`` fixtures have shipped as both parquet TIMESTAMP(NANOS)
-    (which Spark's reader rejects — read as raw nanos via the legacy
-    conf, then integral-divide to µs, matching DuckDB's ns→µs cast
-    truncation) and native TIMESTAMP(MICROS) (read as-is). Branch on
-    the decoded type so either fixture vintage works."""
+    (which Spark's reader rejects — ``get_session`` sets the legacy
+    conf that reads it as raw nanos, then this integral-divides to µs,
+    matching DuckDB's ns→µs cast truncation) and native
+    TIMESTAMP(MICROS) (read as-is). Branch on the decoded type so
+    either fixture vintage works; the session's conf is never changed
+    here."""
     from pyspark.sql import functions as F
     from pyspark.sql.types import LongType
 
     if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
         if isinstance(df.schema["ts"].dataType, LongType):
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))

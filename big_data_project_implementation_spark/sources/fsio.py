@@ -54,6 +54,30 @@ def list_glob(
     ]
 
 
+def parquet_rows(spark: SparkSession, path: str) -> int:
+    """Row count of the parquet directory ``path``, summed from its
+    files' footers on the driver — a metadata read per file, never a
+    Spark job. Files Spark treats as hidden (``_SUCCESS``, ``.crc``)
+    are skipped."""
+    jvm = spark._jvm
+    conf = spark._jsc.hadoopConfiguration()
+    rows = 0
+    for st in _fs(spark, path).listStatus(_jpath(spark, path)):
+        name = st.getPath().getName()
+        if not st.isFile() or name.startswith(("_", ".")):
+            continue
+        reader = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(
+            jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(
+                st, conf
+            )
+        )
+        try:
+            rows += reader.getRecordCount()
+        finally:
+            reader.close()
+    return rows
+
+
 def delete(spark: SparkSession, path: str, recursive: bool = True) -> bool:
     """Recursive delete; returns False when the path did not exist."""
     fs = _fs(spark, path)

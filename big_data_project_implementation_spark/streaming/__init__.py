@@ -115,18 +115,40 @@ def dedup_stream(
     return sdf.dropDuplicates(keys)
 
 
+def _start_per_core(sdf: DataFrame, writer):
+    """Start ``writer`` with one state store per core: a stateful
+    operator opens one store per shuffle partition every micro-batch,
+    and each store commits (a changelog fsync) whether or not its
+    partition saw rows, so the batch default of ``max(cores, 8)`` ran
+    the stores in two waves on a 4-core host. The stream clones its
+    session inside ``start()``, so ``spark.sql.shuffle.partitions`` is
+    set to ``defaultParallelism`` only around that call and restored
+    after; the caller's session keeps its own value (a query planned
+    on it while ``start()`` runs would see the per-core value). A
+    restarted checkpoint keeps the count its offset log records."""
+    conf = sdf.sparkSession.conf
+    key = "spark.sql.shuffle.partitions"
+    old = conf.get(key)
+    conf.set(key, str(sdf.sparkSession.sparkContext.defaultParallelism))
+    try:
+        return writer.start()
+    finally:
+        conf.set(key, old)
+
+
 def to_memory_sink(
     sdf: DataFrame,
     output_mode: str = "update",
     query_name: str | None = None,
     available_now: bool = True,
 ):
-    """Memory sink for tests/driver collection."""
+    """Memory sink for tests/driver collection (one state store per
+    core, see :func:`_start_per_core`)."""
     name = query_name or ("s" + uuid.uuid4().hex[:12])
     writer = sdf.writeStream.format("memory").queryName(name).outputMode(output_mode)
     if available_now:
         writer = writer.trigger(availableNow=True)
-    return name, writer.start()
+    return name, _start_per_core(sdf, writer)
 
 
 def foreach_batch_sink(
@@ -137,7 +159,8 @@ def foreach_batch_sink(
     available_now: bool = True,
 ):
     """foreachRDD parity (reference DStream.scala:659) — per-microbatch
-    callback with exactly-once bookkeeping via the checkpoint dir."""
+    callback with exactly-once bookkeeping via the checkpoint dir; one
+    state store per core (see :func:`_start_per_core`)."""
     writer = (
         sdf.writeStream.foreachBatch(fn)
         .option("checkpointLocation", checkpoint)
@@ -145,7 +168,7 @@ def foreach_batch_sink(
     )
     if available_now:
         writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_per_core(sdf, writer)
 
 
 def sessionize(

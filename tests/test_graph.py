@@ -258,6 +258,38 @@ def test_lpa_poison_round_flags_non_fixed_point(spark):
     assert all(r.converged for r in deep)  # fixed point, flag certifies
 
 
+@pytest.mark.parametrize("iterations", [3, 4])
+def test_lpa_probe_sweep_checkpoints_alone(spark, monkeypatch, iterations):
+    """The final (probe) sweep reads its state twice — as the join's
+    label side and as each node's own label — so its materialization
+    must run on a checkpointed state: one edge join and one aggregation
+    pair. Composed with the sweep before it (the old layout at an even
+    sweep count), that inner edge-sized aggregation was inlined twice:
+    three joins and four aggregations."""
+    from big_data_project_implementation_spark.operators import graph
+
+    edges = spark.createDataFrame(
+        [(i, (i * 7 + 1) % 20) for i in range(20)], "src long, dst long"
+    )
+    seen = []
+    cls = type(edges)
+    real = cls.localCheckpoint
+
+    def recording(self, *args, **kwargs):
+        seen.append(self)
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(cls, "localCheckpoint", recording)
+    graph.label_propagation(edges, iterations).collect()
+    lines = [
+        ln.lstrip(":- +")
+        for ln in seen[-1]._jdf.queryExecution().optimizedPlan()
+        .toString().splitlines()
+    ]
+    assert sum(ln.startswith("Join ") for ln in lines) == 1
+    assert sum(ln.startswith("Aggregate ") for ln in lines) == 2
+
+
 def test_bfs_levels_hand_graph(spark):
     """Hand-checkable BFS: path 1-2-3-4-5 plus isolated 9; seeds {1, 9}.
     Distances follow the path, unreachable nodes are absent, and the

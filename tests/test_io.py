@@ -361,3 +361,25 @@ def test_incremental_read_processes_only_new_partitions(spark, tmp_path):
     commit2()
     df3, _ = incremental_read(spark, path, bm, "day")
     assert df3.count() == 0
+
+
+def test_events_reads_leave_nanos_conf_alone(spark):
+    """The legacy TIMESTAMP(NANOS) setting is session policy, set once
+    by get_session; reading ``events`` (batch or stream) must not
+    change a session's conf as a side effect. The fixtures carry
+    ``ts`` as TIMESTAMP(MICROS), so the reads work either way."""
+    from big_data_project_implementation_spark.queries.registry import (
+        events_stream,
+    )
+
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    assert spark.conf.get(key) == "true"
+    sub = spark.newSession()
+    sub.conf.set(key, "false")
+    df = sources.load_table(sub, SF_DIR, "events")
+    assert sub.conf.get(key) == "false"
+    assert dict(df.dtypes)["ts"] == "timestamp"
+    assert df.count() > 0
+    sdf = events_stream(sub, SF_DIR)
+    assert sub.conf.get(key) == "false"
+    assert sdf.isStreaming and dict(sdf.dtypes)["ts"] == "timestamp"

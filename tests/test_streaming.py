@@ -1273,3 +1273,275 @@ def test_compact_batch_view_equivalence_and_crash_recovery(spark):
         )
     finally:
         shutil.rmtree(out_dir, ignore_errors=True)
+
+
+# -- the stream gate: one job per steady-state batch, one store per core
+
+EVENT_SCHEMA = "event_id long, ts timestamp, user_id long, value long"
+
+
+def _land_events(inbox: str, k: int, ids: list[int]) -> None:
+    """One parquet event FILE (the file source does not recurse into a
+    Spark-written directory); its mtime makes it micro-batch k under
+    ``max_files_per_trigger=1``."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    t0 = datetime.datetime(2024, 1, 1, tzinfo=datetime.timezone.utc)
+    path = os.path.join(inbox, f"f{k}.parquet")
+    pq.write_table(
+        pa.table({
+            "event_id": pa.array(ids, pa.int64()),
+            "ts": pa.array(
+                [t0 + datetime.timedelta(seconds=i) for i in ids],
+                pa.timestamp("us", tz="UTC"),
+            ),
+            "user_id": pa.array([i % 7 for i in ids], pa.int64()),
+            "value": pa.array(ids, pa.int64()),
+        }),
+        path,
+    )
+    os.utime(path, (1_000 + k, 1_000 + k))
+
+
+def _event_stream(spark, inbox: str, watermark: bool = True):
+    sdf = streaming.read_file_stream(
+        spark, inbox, schema=EVENT_SCHEMA, max_files_per_trigger=1
+    )
+    if watermark:
+        return streaming.dedup_stream(sdf, ["event_id"], "ts", "1 hour")
+    return streaming.dedup_stream(sdf, ["event_id"])
+
+
+def _n_parquet_files(path: str) -> int:
+    return sum(f.endswith(".parquet") for f in os.listdir(path))
+
+
+def _conf_of(ckpt: str, batch_id: int) -> dict:
+    import json
+
+    with open(f"{ckpt}/offsets/{batch_id}") as fh:
+        return json.loads(fh.read().splitlines()[1])["conf"]
+
+
+def test_stream_gate_steady_state_runs_one_job(spark):
+    """Inside a stateful stream, a steady-state agg gate call (v=N>0)
+    runs exactly one Spark job, the write (which also runs the batch's
+    dedup), and writes one file: v=N-1 is read with the batch's own
+    state schema (no inference job), and the fan-out comes from
+    v=N-1's parquet footers (no checkpoint job, no count job)."""
+    from big_data_project_implementation_spark.operators.views import (
+        MaterializedView,
+    )
+
+    d = tempfile.mkdtemp(prefix="gate_jobs_")
+    sc = spark.sparkContext
+    try:
+        inbox = f"{d}/inbox"
+        os.makedirs(inbox)
+        for k in range(3):
+            # each file repeats its first id: one duplicate per batch
+            _land_events(inbox, k, list(range(100 * k, 100 * k + 100)) + [100 * k])
+        mv = MaterializedView("agg", keys=["user_id"], value="value")
+        gate = mv.stream_gate(f"{d}/view")
+        jobs: dict[int, int] = {}
+
+        def grouped(batch, batch_id):
+            group = f"{d}-gate-{batch_id}"
+            sc.setJobGroup(group, group)
+            try:
+                gate(batch, batch_id)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            jobs[batch_id] = len(sc.statusTracker().getJobIdsForGroup(group))
+
+        streaming.foreach_batch_sink(
+            _event_stream(spark, inbox), grouped, f"{d}/ckpt", "append"
+        ).awaitTermination()
+        assert jobs[1] == 1 and jobs[2] == 1, jobs
+        assert _n_parquet_files(f"{d}/view/v=1") == 1
+        assert _n_parquet_files(f"{d}/view/v=2") == 1
+        got = sorted(
+            tuple(r) for r in mv.stream_read(spark, f"{d}/view")
+            .select("user_id", "n", "sum", "min", "max").collect()
+        )
+        users = [list(range(u, 300, 7)) for u in range(7)]
+        assert got == [
+            (u, len(xs), sum(xs), min(xs), max(xs)) for u, xs in enumerate(users)
+        ]
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
+
+
+def test_state_gate_first_version_releases_its_checkpoint(spark):
+    """v=0 has no predecessor footer to size from, so it checkpoints
+    and counts exactly — and releases that checkpoint after its write:
+    a batch-0 gate call adds no persisted RDD. (Compared as id sets,
+    not sizes: the context cleaner may drop earlier tests' RDDs
+    meanwhile.)"""
+    from big_data_project_implementation_spark.operators.views import (
+        LexicalIndex,
+        MaterializedView,
+    )
+
+    d = tempfile.mkdtemp(prefix="gate_release_")
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    try:
+        before = set(persisted().keys())
+        rows = spark.range(100).select(
+            (F.col("id") % 50).alias("g"), F.col("id").alias("v")
+        )
+        MaterializedView("agg", keys=["g"], value="v").stream_gate(
+            f"{d}/agg"
+        )(rows, 0)
+        assert set(persisted().keys()) <= before
+        docs = spark.createDataFrame(
+            [(1, "a b c"), (2, "b c d")], "doc_id long, text string"
+        )
+        LexicalIndex().stream_gate(f"{d}/lex")(docs, 0)
+        assert set(persisted().keys()) <= before
+        assert _n_parquet_files(f"{d}/agg/v=0") == 1
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
+
+
+def test_state_chain_fanout_follows_predecessor_footer(spark):
+    """Under state_files="auto" a version's fan-out follows the row
+    count in its PREDECESSOR's parquet footers, so it lags one batch:
+    the batch that carries the chain past state_file_rows still writes
+    one file, and the next version — whose predecessor holds more than
+    state_file_rows rows — is not coalesced. AQE is off here, as in a
+    stateful stream, so the plan's own parallelism is the shuffle's."""
+    from big_data_project_implementation_spark.operators.views import (
+        MaterializedView,
+        _sized_state,
+    )
+    from big_data_project_implementation_spark.sources import fsio
+
+    d = tempfile.mkdtemp(prefix="gate_fanout_")
+    sub = spark.newSession()
+    sub.conf.set("spark.sql.adaptive.enabled", "false")
+    sub.conf.set("spark.sql.shuffle.partitions", "4")
+    try:
+        mv = MaterializedView("agg", keys=["g"], value="v", state_file_rows=10)
+        gate = mv.stream_gate(d)
+
+        def batch(lo, hi):
+            return sub.range(lo, hi).select(
+                F.col("id").alias("g"), F.col("id").alias("v")
+            )
+
+        gate(batch(0, 5), 0)  # exact count: 5 rows, one file
+        gate(batch(5, 40), 1)  # v=0 held 5 rows: one file, 40 rows in it
+        gate(batch(40, 41), 2)  # v=1 holds 40 > 10: not coalesced
+        assert _n_parquet_files(f"{d}/v=0") == 1
+        assert _n_parquet_files(f"{d}/v=1") == 1
+        assert fsio.parquet_rows(sub, f"{d}/v=1") == 40
+        assert _n_parquet_files(f"{d}/v=2") > 1
+        assert fsio.parquet_rows(sub, f"{d}/v=2") == 41
+        got = sorted(tuple(r) for r in mv.stream_read(sub, d).collect())
+        assert got == [(g, 1, g, g, g) for g in range(41)]
+        # the rule itself: a predecessor over the bound leaves the plan
+        # as it is, one at the bound coalesces it
+        rows = batch(0, 41)
+        assert _sized_state(rows, "auto", 10, prev_rows=11) is rows
+        assert _sized_state(rows, "auto", 10, prev_rows=10).rdd.getNumPartitions() == 1
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
+
+
+def test_stream_sinks_start_one_state_store_per_core(spark):
+    """foreach_batch_sink and to_memory_sink start a stateful stream
+    with spark.sql.shuffle.partitions = defaultParallelism — recorded
+    in the checkpoint's offsets/0 and seen as the state operator's
+    store count — while the caller's session keeps its own value,
+    during the stream and after it."""
+    cores = spark.sparkContext.defaultParallelism
+    key = "spark.sql.shuffle.partitions"
+    sub = spark.newSession()
+    sub.conf.set(key, str(cores + 3))
+    d = tempfile.mkdtemp(prefix="per_core_")
+    seen: list[str] = []
+
+    def sink(batch, batch_id):
+        # a stateful batch must run (its stores commit) to complete
+        batch.count()
+        seen.append(sub.conf.get(key))
+
+    try:
+        inbox = f"{d}/inbox"
+        os.makedirs(inbox)
+        _land_events(inbox, 0, list(range(50)))
+        q = streaming.foreach_batch_sink(
+            _event_stream(sub, inbox), sink, f"{d}/ckpt", "append"
+        )
+        q.awaitTermination()
+        assert seen and set(seen) == {str(cores + 3)}
+        assert sub.conf.get(key) == str(cores + 3)
+        assert _conf_of(f"{d}/ckpt", 0)[key] == str(cores)
+        stores = [
+            op["numStateStoreInstances"]
+            for p in q.recentProgress for op in p.stateOperators
+            if p.numInputRows > 0
+        ]
+        assert stores and set(stores) == {cores}
+
+        name, mq = streaming.to_memory_sink(
+            _event_stream(sub, inbox), output_mode="append"
+        )
+        mq.awaitTermination()
+        assert sub.conf.get(key) == str(cores + 3)
+        assert sub.table(name).count() == 50
+        assert {
+            op.numStateStoreInstances
+            for p in mq.recentProgress for op in p.stateOperators
+            if p.numInputRows > 0
+        } == {cores}
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
+
+
+def test_restart_keeps_checkpointed_state_partitions(spark):
+    """A checkpoint begun with more state partitions than cores keeps
+    its count when foreach_batch_sink restarts it (Spark restores it
+    from the offset log), and the dedup stays exactly-once across the
+    restart: every id lands once, none replays, and a duplicate of an
+    id from before the restart is still dropped."""
+    cores = spark.sparkContext.defaultParallelism
+    begun = 2 * cores
+    key = "spark.sql.shuffle.partitions"
+    d = tempfile.mkdtemp(prefix="per_core_restart_")
+    out: list[int] = []
+
+    def sink(batch, batch_id):
+        out.extend(r.event_id for r in batch.select("event_id").collect())
+
+    try:
+        inbox, ckpt = f"{d}/inbox", f"{d}/ckpt"
+        os.makedirs(inbox)
+        _land_events(inbox, 0, list(range(40)))
+        first = spark.newSession()
+        first.conf.set(key, str(begun))
+        (
+            _event_stream(first, inbox, watermark=False)
+            .writeStream.foreachBatch(sink)
+            .option("checkpointLocation", ckpt)
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
+        )
+        assert _conf_of(ckpt, 0)[key] == str(begun)
+        # ids 30..39 repeat from before the restart
+        _land_events(inbox, 1, list(range(30, 60)))
+        streaming.foreach_batch_sink(
+            _event_stream(spark, inbox, watermark=False), sink, ckpt, "append"
+        ).awaitTermination()
+        assert _conf_of(ckpt, 1)[key] == str(begun)
+        parts = {p for p in os.listdir(f"{ckpt}/state/0") if p.isdigit()}
+        assert parts == {str(p) for p in range(begun)}
+        assert sorted(out) == list(range(60))
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
